@@ -422,3 +422,28 @@ def test_curation_pipeline_plan_shape(spark):
     assert count_operator(df, "BroadcastHashJoin") <= 2
     rows = df.collect()
     assert rows and all(r.n_raw >= r.n_quality >= r.n_unique >= r.n_clean for r in rows)
+
+
+def test_per_source_maps_reject_quoted_source_names(spark, tmp_path):
+    """sample_temperature / mix_token_budget fold per-source maps into
+    from_json literals, which cannot carry a quote or backslash: the
+    error names the offending source instead of blaming the payload."""
+    import os
+
+    import pytest
+
+    from tiflash_spark.pipeline.curation import mix_token_budget, sample_temperature
+
+    for bad in ("o'brien", "back\\slash"):
+        sf_dir = str(tmp_path / f"sf_{len(bad)}")
+        rows = [
+            Row(doc_id=i, text=f"word{i} other text", lang="en", source=src, n_chars=20)
+            for i, src in enumerate(["plain", bad, "plain", bad])
+        ]
+        spark.createDataFrame(rows).coalesce(1).write.parquet(
+            os.path.join(sf_dir, "documents.parquet")
+        )
+        for query in (sample_temperature, mix_token_budget):
+            with pytest.raises(ValueError, match="source name") as err:
+                query(spark, sf_dir)
+            assert repr(bad) in str(err.value)

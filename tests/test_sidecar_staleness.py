@@ -101,3 +101,38 @@ def test_ivf_index_rebuilds_on_source_rewrite(spark, tmp_path):
     assert assigned1.count() == n0  # same corpus size ...
     first1 = cents1.orderBy("cid").first().cvec[0]
     assert first1 != first0 or first0 == 0.0  # ... but re-derived centroids
+
+
+def test_centroid_graph_rebuilds_on_centroid_rewrite(spark, tmp_path):
+    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
+    from tiflash_spark.pipeline.similarity import (
+        build_centroid_graph_df,
+        centroid_graph,
+    )
+
+    sf_dir = str(tmp_path / "sf_stale_graph")
+    os.makedirs(sf_dir)
+    gloc = os.path.join(_warehouse_path(spark), f"ivf_graph_{_sf_tag(sf_dir)}")
+
+    def cents(xs: list[float]):
+        return spark.createDataFrame(
+            [(i, [x, 0.0]) for i, x in enumerate(xs)], "cid int, cvec array<double>"
+        )
+
+    def inline(df) -> dict:
+        return {
+            int(r.cid): [int(n) for n in r.neighbors]
+            for r in build_centroid_graph_df(spark, df).collect()
+        }
+
+    a = cents([0.0, 1.0, 2.0, 10.0, 11.0, 12.0])
+    assert centroid_graph(spark, sf_dir, a) == inline(a)
+    with open(os.path.join(gloc, "_SOURCE_STAMP")) as fh:
+        stamp0 = fh.read()
+
+    # same sf_dir, a rewritten centroid set with different neighborhoods
+    b = cents([0.0, 10.0, 1.0, 11.0, 2.0, 12.0])
+    assert inline(b) != inline(a)
+    assert centroid_graph(spark, sf_dir, b) == inline(b)  # not served stale
+    with open(os.path.join(gloc, "_SOURCE_STAMP")) as fh:
+        assert fh.read() != stamp0

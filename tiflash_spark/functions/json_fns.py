@@ -199,9 +199,3 @@ def json_from_duration(dur_ns: Column | str) -> Column:
     return F.concat(
         F.lit('"'), sec_to_time_str((col / 1_000_000_000).cast("long")), F.lit('"')
     )
-
-
-def json_as_string(c: Column | str) -> Column:
-    """CAST(json AS STRING): the document text itself (JSON is text at
-    rest here — the reference serializes its binary JSON)."""
-    return F.col(c) if isinstance(c, str) else c

@@ -83,10 +83,6 @@ def sec_to_time_str(seconds: Column) -> Column:
     )
 
 
-def duration_hours(dur_ns: Column) -> Column:
-    return (dur_ns / 3_600_000_000_000).cast("long")
-
-
 # --- unsigned widening (§1.2) -----------------------------------------------
 
 
@@ -101,11 +97,6 @@ def uint64_to_decimal(n: Column) -> Column:
 
 
 # --- bit --------------------------------------------------------------------
-
-
-def bit_to_long(b: Column) -> Column:
-    """MySQL BIT(n) as UInt64 (TiDBTypes.h tag 16)."""
-    return b.cast("long")
 
 
 def export_set(bits: Column, on: str = "1", off: str = "0", sep: str = ",", n: int = 8) -> Column:

@@ -307,31 +307,6 @@ def mysql_microsecond(c: Column | str) -> Column:
     return F.pmod(F.unix_micros(col), F.lit(1000000)).cast("int")
 
 
-def mysql_sysdate(fsp: int = 0) -> Column:
-    """SYSDATE([fsp]) (reference sysDateWithFsp/sysDateWithoutFsp):
-    evaluation-time timestamp truncated to fsp fractional digits.
-    Nondeterministic by contract — never under an oracle."""
-    if not 0 <= fsp <= 6:
-        raise ValueError("fsp must be 0..6")
-    ts = F.localtimestamp()
-    scale = 10 ** (6 - fsp)
-    return F.timestamp_micros(
-        (F.unix_micros(ts) / scale).cast("long") * scale
-    )
-
-
-def mysql_format_with_locale(
-    x: Column | str, decimals: int, locale: str = "en_US"
-) -> Column:
-    """FORMAT(X, D, locale) (reference formatWithLocale): MySQL falls back
-    to en_US with a warning for locales it doesn't know; we support the
-    en_US family (comma thousands, dot decimal) and apply the same
-    fallback for everything else."""
-    col = F.col(x) if isinstance(x, str) else x
-    del locale  # only the en_US rendering is supported — MySQL's fallback
-    return F.format_number(col, decimals)
-
-
 def mysql_log(b: Column | float, x: Column | str) -> Column:
     """LOG(B, X) — arbitrary-base logarithm (reference log2args):
     NULL when B <= 0, B = 1, or X <= 0 (MySQL's domain rule)."""

@@ -110,11 +110,6 @@ def fast_scan(log: DataFrame) -> DataFrame:
     return log.filter(F.col(DELMARK) == 0)
 
 
-def raw_scan(log: DataFrame) -> DataFrame:
-    """Raw read mode: everything, hidden columns included (ReadMode.h:35)."""
-    return log
-
-
 def compact(log: DataFrame, compact_ts: int) -> DataFrame:
     """COMPACT filter mode (DMVersionFilterBlockInputStream.h:37-44): keep,
     per handle, the newest version <= compact_ts (even if delete-marked, so

@@ -106,7 +106,7 @@ def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     RSOperator index)."""
     import os
 
-    from tiflash_spark.catalog import literal_memo
+    from tiflash_spark import memo
 
     part = load_table(spark, sf_dir, "part").where(
         F.col("p_size") == 1
@@ -116,12 +116,12 @@ def join_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the runtime filter is a pruning structure derived from part.parquet
     # — building it per query BUILD was one collect job each time (the
-    # anti-scaling driver pattern); memo it on the source's (mtime, size)
-    # like every sidecar, mirroring the reference's RuntimeFilterMgr
-    # which caches built filters rather than re-aggregating per plan
-    rf = literal_memo(
-        os.path.join(sf_dir, "part.parquet"),
-        "rf_p_size_1",
+    # anti-scaling driver pattern); memoized per part.parquet version,
+    # mirroring the reference's RuntimeFilterMgr which caches built
+    # filters rather than re-aggregating per plan
+    part_path = os.path.join(sf_dir, "part.parquet")
+    rf = memo.cached(
+        "rf_p_size_1", part_path, (part_path,),
         lambda: build_runtime_filter(part, "p_partkey"),
     )
     joined = runtime_filter_join(li, part, "l_partkey", "p_partkey", filter_=rf)

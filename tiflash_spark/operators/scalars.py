@@ -655,13 +655,13 @@ def scalar_stragglers(spark: SparkSession, sf_dir: str) -> DataFrame:
         mysql_to_seconds,
     )
 
-    from tiflash_spark.pipeline.text import prepared
+    from tiflash_spark import memo
 
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") <= 400)
 
     # the whole scalar battery is a CONSTANT expression list (each
-    # mysql_* helper expands to a sizeable tree) — prepared() once per
-    # JVM (guide §5 driver work)
+    # mysql_* helper expands to a sizeable tree) — built once (memo.expr;
+    # guide §5 driver work)
     def _build_cols():
         d = F.col("o_orderdate")
         k = F.col("o_orderkey")
@@ -689,7 +689,7 @@ def scalar_stragglers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return o.select(
-        "o_orderkey", *prepared(("scalar_stragglers", "cols"), _build_cols)
+        "o_orderkey", *memo.expr(("scalar_stragglers", "cols"), _build_cols)
     )
 
 

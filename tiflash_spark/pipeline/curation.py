@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark import memo
 from tiflash_spark.catalog import load_table
 from tiflash_spark.pipeline.text import tokens
 
@@ -59,9 +60,25 @@ def word_ngrams_of(toks: Column, n: int = NGRAM_N) -> Column:
 # (like the synthetic %97 split) must not OOM every executor at scale
 BROADCAST_GRAM_LIMIT = 2_000_000
 
-# broadcast-sizing counts keyed by the eval-gram frame's analyzed-plan
-# semantic hash — planner decisions, not results (see contaminated_ids)
-_N_EVAL_MEMO: dict = {}
+
+def _plan_sources(df: DataFrame) -> list[str]:
+    """Root paths of every file relation under ``df``'s analyzed plan
+    (DataFrame.inputFiles() stops at cached subtrees)."""
+    from urllib.parse import unquote, urlparse
+
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        rel = leaf.relation()
+        if rel.getClass().getSimpleName() != "HadoopFsRelation":
+            continue
+        for uri in rel.location().rootPaths().mkString("\n").split("\n"):
+            u = urlparse(uri)
+            out.append(unquote(u.path) if u.scheme in ("", "file") else uri)
+    return out
 
 
 def contaminated_ids(
@@ -91,18 +108,16 @@ def contaminated_ids(
     text — identical grams, one less corpus tokenize per side.
     """
 
-    from tiflash_spark.pipeline.text import prepared
-
     def grams_of(df: DataFrame) -> Column:
-        # constant deep HOF tree per (column, n) — prepared once per JVM
-        # (the transform/slice/array_join chain costs ~0.1 s of py4j to
+        # constant deep HOF tree per (column, n) — built once (the
+        # transform/slice/array_join chain costs ~0.1 s of py4j to
         # construct; guide §5 driver work)
         if tokens_col is not None:
-            return prepared(
+            return memo.expr(
                 ("word_ngrams_of", tokens_col, NGRAM_N),
                 lambda: word_ngrams_of(F.col(tokens_col)),
             )
-        return prepared(
+        return memo.expr(
             ("word_ngrams", text_col, NGRAM_N),
             lambda: word_ngrams(F.col(text_col)),
         )
@@ -133,16 +148,15 @@ def contaminated_ids(
         n_eval = eval_grams_hint
     else:
         # the sizing count is a planner DECISION (broadcast vs shuffle),
-        # not a query result — memo it per analyzed-plan semantic hash so
-        # repeated builds of the same query skip the count job (~0.1-0.2 s
-        # of driver orchestration per build even cache-warm; the 8c/32c
-        # anti-scaling term). Process-local, same lifetime as Spark's own
-        # per-session file-listing cache: an in-place corpus rewrite
-        # mid-process would reuse only the broadcast decision, never rows.
-        key = eval_grams._jdf.queryExecution().analyzed().semanticHash()
-        n_eval = _N_EVAL_MEMO.get(key)
-        if n_eval is None:
-            n_eval = _N_EVAL_MEMO[key] = eval_grams.count()
+        # not a query result — memoized so repeated builds of the same
+        # query skip the count job (~0.1-0.2 s of driver orchestration per
+        # build even cache-warm; the 8c/32c anti-scaling term)
+        n_eval = memo.cached(
+            "n_eval_grams",
+            eval_grams._jdf.queryExecution().analyzed().semanticHash(),
+            _plan_sources(eval_grams),
+            eval_grams.count,
+        )
     if n_eval <= broadcast_limit:
         eval_side = F.broadcast(eval_grams)
     else:
@@ -417,6 +431,23 @@ ORACLE = {
 # --- temperature-weighted mixture sampling -----------------------------------
 
 
+def _check_source_names(names) -> None:
+    """Per-source maps fold into plans as from_json string literals
+    (similarity._fold_json_literal), which cannot carry a quote or a
+    backslash — nor, therefore, a name whose JSON form escapes a
+    character ('"', '\\', non-ASCII). Reject such a source by name
+    before folding."""
+    import json
+
+    for name in names:
+        j = json.dumps(name)
+        if "'" in j or "\\" in j:
+            raise ValueError(
+                f"source name {name!r} cannot be folded into a per-source "
+                "map literal (its JSON form has a quote or backslash)"
+            )
+
+
 MIX_TEMPERATURE = 0.7  # classic multilingual-mixing temperature
 MIX_BUDGET_FRAC = 0.5  # sample half the corpus, redistributed by weight
 
@@ -463,29 +494,27 @@ def sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("keep_millionths"),
     )
     # ONE corpus aggregate, zero joins (r11): the per-source weights and
-    # keep thresholds are collected once per process via the SAME quota
-    # expressions (bit-identical values; literal_memo keys on
-    # documents.parquet (mtime, size)) and folded back as map literals.
-    # n_orig and the conditional n_sampled then come out of a single
-    # groupBy over the live scan — the quota broadcast build, the
+    # keep thresholds are collected once per documents version via the
+    # SAME quota expressions (bit-identical values) and folded back as map
+    # literals. n_orig and the conditional n_sampled then come out of a
+    # single groupBy over the live scan — the quota broadcast build, the
     # crossJoin(total) build and the left join disappear per run; every
     # source is present because the aggregate sees every row.
-    import os as _os3
+    import os
 
-    from tiflash_spark.catalog import literal_memo
     from tiflash_spark.pipeline.similarity import _fold_json_literal
 
     def _fetch_quota_literals():
         rows = quota.collect()
+        _check_source_names(r.source for r in rows)
         return (
             {r.source: float(r.weight) for r in rows},
             {r.source: int(r.keep_millionths) for r in rows},
         )
 
-    w_map, km_map = literal_memo(
-        _os3.path.join(sf_dir, "documents.parquet"),
-        "sample_temp_quota",
-        _fetch_quota_literals,
+    docs_path = os.path.join(sf_dir, "documents.parquet")
+    w_map, km_map = memo.cached(
+        "sample_temp_quota", docs_path, (docs_path,), _fetch_quota_literals
     )
     w_c = F.element_at(
         _fold_json_literal(w_map, "map<string,double>"), F.col("source")
@@ -827,19 +856,18 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The offsets (|sources|·MIX_BUCKETS rows) and quotas (|sources|
     # rows) are tiny derived tables that were re-broadcast per run (two
     # broadcast builds + the budget job each execution). They are now
-    # collected ONCE per process — via the SAME Spark expression trees,
-    # so every value is bit-identical by construction — keyed to
-    # documents.parquet's (mtime, size) like every plan literal, and
-    # folded back in as map literals: the per-row lookups replace both
+    # collected ONCE per documents version — via the SAME Spark
+    # expression trees, so every value is bit-identical by construction —
+    # and folded back in as map literals: the per-row lookups replace both
     # broadcast joins (the joins were total — every (source, bucket) in
     # docs appears in bt by construction — so row identity is untouched).
-    import os as _os2
+    import os
 
-    from tiflash_spark.catalog import literal_memo
     from tiflash_spark.pipeline.similarity import _fold_json_literal
 
     def _fetch_mix_literals():
         off_rows = offs.collect()
+        _check_source_names(r.source for r in off_rows)
         if any("|" in r.source for r in off_rows):
             raise ValueError(
                 "source names may not contain '|' (mix offset map key separator)"
@@ -849,10 +877,9 @@ def mix_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             {r.source: int(r.quota_tokens) for r in quota.collect()},
         )
 
-    off_map, quota_map = literal_memo(
-        _os2.path.join(sf_dir, "documents.parquet"),
-        "mix_offs_quota",
-        _fetch_mix_literals,
+    docs_path = os.path.join(sf_dir, "documents.parquet")
+    off_map, quota_map = memo.cached(
+        "mix_offs_quota", docs_path, (docs_path,), _fetch_mix_literals
     )
     off_c = F.element_at(
         _fold_json_literal(off_map, "map<string,bigint>"),
@@ -949,9 +976,10 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle via Spark's distinct-aggregate expansion. No second corpus
     pass for any column."""
     from tiflash_spark.pipeline.text import (
+        QUALITY_THRESHOLDS,
         dup_frac_of,
         mean_word_len,
-        prepared,
+        quality_keep,
         tokens,
         top_word_frac,
         word_grams,
@@ -964,8 +992,8 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signals staged into columns first (the quality_signals staging
     # note): the keep rule then reads cheap attributes, so each gram
     # array / fold is built once per row instead of once per mention.
-    # The whole projection is CONSTANT — prepared() once per JVM (the
-    # deep HOF trees cost ~0.25 s of py4j per build, guide §5).
+    # The whole projection is constant per threshold set — built once
+    # (memo.expr; the deep HOF trees cost ~0.25 s of py4j per build).
     def _build_sig_cols():
         w = F.col("w")
         n = F.when(
@@ -978,19 +1006,16 @@ def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             top_word_frac(w).alias("_twf"),
             word_grams(w, 3).alias("_g3"),
         )
-        keep = (
-            (F.col("_n") >= 10) & (F.col("_n") <= 100_000)
-            & (F.col("_mwl") >= 3) & (F.col("_mwl") <= 10)
-            & (F.col("_twf") <= 0.2)
-            & (dup_frac_of(F.col("_g3")) <= 0.2)
+        keep = quality_keep(
+            F.col("_n"), F.col("_mwl"), F.col("_twf"), dup_frac_of(F.col("_g3"))
         )
         return sig_cols + (
             F.col("_n").cast("long").alias("n_tok"),
             keep.cast("int").alias("keep"),
         )
 
-    *sig_cols, n_tok_c, keep_c = prepared(
-        ("dataset_card", "sig_cols"), _build_sig_cols
+    *sig_cols, n_tok_c, keep_c = memo.expr(
+        ("dataset_card", "sig_cols", QUALITY_THRESHOLDS), _build_sig_cols
     )
     sig = d.select("source", "lang", *sig_cols)
     # the 5-column NARROW proxy (source, lang, fp, n_tok, keep) is
@@ -1092,9 +1117,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from tiflash_spark.pipeline.dedup import fingerprint
     from tiflash_spark.pipeline.text import (
+        QUALITY_THRESHOLDS,
         dup_frac_of,
         mean_word_len,
-        prepared,
+        quality_keep,
         scan_underparallelized,
         tokens,
         top_word_frac,
@@ -1127,20 +1153,19 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # way (it was a filter before), and the short-circuit still runs
     # inside the expression.
     #
-    # The whole staged projection is CONSTANT, and constructing it
-    # (word_grams' zip_with chain, top_word_frac's fold) measured
-    # 0.3-0.4 s of py4j round-trips per query build — so the Column
-    # tuple is prepared() once per JVM (guide §5: driver work).
+    # The whole staged projection is constant per threshold set, and
+    # constructing it (word_grams' zip_with chain, top_word_frac's fold)
+    # measured 0.3-0.4 s of py4j round-trips per query build — so the
+    # Column tuple is built once (memo.expr; guide §5: driver work).
     def _build_staged_cols():
         n = F.when(F.length(F.trim(F.col("text"))) == 0, F.lit(0)).otherwise(
             F.size(F.col("w"))
         )
-        mwl = mean_word_len(F.col("w"))
-        keep = (
-            (n >= 10) & (n <= 100_000)
-            & (mwl >= 3) & (mwl <= 10)
-            & (top_word_frac(F.col("w")) <= 0.2)
-            & (dup_frac_of(word_grams(F.col("w"), 3)) <= 0.2)
+        keep = quality_keep(
+            n,
+            mean_word_len(F.col("w")),
+            top_word_frac(F.col("w")),
+            dup_frac_of(word_grams(F.col("w"), 3)),
         )
         is_eval = F.col("doc_id") % 97 == 0
         return (
@@ -1149,8 +1174,9 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             is_eval.alias("is_eval"),
         )
 
-    n_tok_c, q_c, is_eval_c = prepared(
-        ("curation_pipeline", "staged_cols"), _build_staged_cols
+    n_tok_c, q_c, is_eval_c = memo.expr(
+        ("curation_pipeline", "staged_cols", QUALITY_THRESHOLDS),
+        _build_staged_cols,
     )
     staged = base.select("doc_id", "source", "fp", "w", n_tok_c, q_c, is_eval_c)
     # min(when(q, doc_id)) ignores NULLs, so the keeper pick sees only
@@ -1159,7 +1185,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # forcing unpersist-per-call doubled steady-state runtime)
     qf = staged.withColumn(
         "is_keeper",
-        prepared(
+        memo.expr(
             ("curation_pipeline", "keeper_col"),
             lambda: F.col("q")
             & (
@@ -1208,8 +1234,8 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return (chunk,) + aggs
 
-    chunk_c, *agg_cs = prepared(
-        ("curation_pipeline", "report_cols"), _build_report_cols
+    chunk_c, *agg_cs = memo.expr(
+        ("curation_pipeline", "report_cols", PACK_CAPACITY), _build_report_cols
     )
     flagged = qf.join(
         F.broadcast(dirty.withColumn("_dirty", F.lit(1))), "doc_id", "left"
@@ -1377,11 +1403,7 @@ def line_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the pre-exploded table with bucket-local exchanges instead of
     re-Generating the corpus twice per run. At 100 TB the explode is the
     dominant scan cost, so this is a 2× cut on the heaviest stage."""
-    from tiflash_spark.pipeline.fulltext import (
-        _ensure_bucketed,
-        _sf_tag,
-        _source_stamp,
-    )
+    from tiflash_spark.pipeline.fulltext import _ensure_bucketed, _sf_tag
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
@@ -1392,8 +1414,7 @@ def line_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _ensure_bucketed(
-        spark, f"doc_lines_{_sf_tag(sf_dir)}", build, "line", 32,
-        source_stamp=_source_stamp(sf_dir, "documents"),
+        spark, sf_dir, f"doc_lines_{_sf_tag(sf_dir)}", build, "line", 32
     )
 
 

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark import memo
 from tiflash_spark.catalog import load_table
 from tiflash_spark.pipeline.text import fingerprint, tokens
 
@@ -164,26 +165,19 @@ def auto_band_params(n_docs: int) -> tuple[int, int]:
     return (7, 7)
 
 
-# one cheap count(*) per sf_dir per session (parquet metadata read)
-_AUTO_BAND_CACHE: dict[str, tuple[int, int]] = {}
-
-
 def _resolve_band_params(
     spark: SparkSession, sf_dir: str,
     bands: int | None, rows: int | None,
 ) -> tuple[int, int]:
     if bands is not None and rows is not None:
         return (bands, rows)
-    from tiflash_spark.pipeline.fulltext import _source_stamp
+    import os
 
-    # keyed by (sf_dir, source stamp) like every sidecar: an in-place
-    # corpus rewrite re-counts instead of reusing a stale doc count
-    key = (sf_dir, _source_stamp(sf_dir, "documents"))
-    got = _AUTO_BAND_CACHE.get(key)
-    if got is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        got = auto_band_params(n)
-        _AUTO_BAND_CACHE[key] = got
+    docs = os.path.join(sf_dir, "documents.parquet")
+    got = memo.cached(
+        "auto_band_params", docs, (docs,),
+        lambda: auto_band_params(load_table(spark, sf_dir, "documents").count()),
+    )
     return (bands or got[0], rows or got[1])
 
 
@@ -285,11 +279,9 @@ def minhash_band_index(
             ).alias("band", "bh"),
         )
 
-    from tiflash_spark.pipeline.fulltext import _source_stamp
-
     return _ensure_bucketed(
-        spark, f"mh_bands_{_sf_tag(sf_dir)}_{bands}x{rows}", build,
-        ("band", "bh"), 32, source_stamp=_source_stamp(sf_dir, "documents")
+        spark, sf_dir, f"mh_bands_{_sf_tag(sf_dir)}_{bands}x{rows}", build,
+        ("band", "bh"), 32,
     )
 
 
@@ -394,11 +386,8 @@ def simhash_band_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("band", "bh"),
         )
 
-    from tiflash_spark.pipeline.fulltext import _source_stamp
-
     return _ensure_bucketed(
-        spark, f"sh_bands_{_sf_tag(sf_dir)}", build, ("band", "bh"), 32,
-        source_stamp=_source_stamp(sf_dir, "documents"),
+        spark, sf_dir, f"sh_bands_{_sf_tag(sf_dir)}", build, ("band", "bh"), 32
     )
 
 

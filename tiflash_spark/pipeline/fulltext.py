@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiflash_spark.catalog import load_table
+from tiflash_spark import memo
+from tiflash_spark.catalog import load_table, read_parquet_memo
 
 TOKEN_RE = "[^a-z0-9]+"
 
@@ -89,85 +90,46 @@ def _warehouse_path(spark: SparkSession) -> str | None:
     return None
 
 
-# --- sidecar staleness: every at-rest index/fixture derived from a source
-# table carries the source's (mtime, size) stamp, like read_parquet_memo's
-# keying — an existence-only check would serve stale postings/scales/codes
-# (silently wrong scores) if a corpus were rewritten IN PLACE at the same
-# sf_dir. The stamp file is underscore-prefixed so Spark's parquet reader
-# ignores it inside table directories.
-
-
-def _source_stamp(sf_dir: str, table: str = "documents") -> str:
-    """(mtime_ns, size) identity of the source parquet a sidecar derives
-    from. Directories stamp too (mtime changes when members are replaced)."""
-    import os
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(p)
-        return f"{st.st_mtime_ns}-{st.st_size}"
-    except OSError:
-        return "absent"
-
-
-def _sidecar_fresh(loc: str | None, stamp: str | None) -> bool:
-    """True when the sidecar at ``loc`` was built from the stamped source."""
-    import os
-
-    if stamp is None or not loc:
-        return True
-    try:
-        with open(os.path.join(loc, "_SOURCE_STAMP")) as fh:
-            return fh.read().strip() == stamp
-    except OSError:
-        return False
-
-
-def _write_source_stamp(loc: str, stamp: str | None) -> None:
-    import os
-
-    if stamp is None:
-        return
-    with open(os.path.join(loc, "_SOURCE_STAMP"), "w") as fh:
-        fh.write(stamp)
-
-
 def _ensure_bucketed(
     spark: SparkSession,
+    sf_dir: str,
     name: str,
     build,
     bucket_col: str | tuple[str, ...],
     buckets: int,
-    source_stamp: str | None = None,
 ) -> DataFrame:
-    """Get a bucketed table, building it at most once per warehouse:
-    1) already in this session's catalog AND fresh → use it;
-    2) fresh files exist from a previous session → re-register the
-       external table with the same bucket spec (bucket ids live in file
-       names, so the DDL round-trip preserves co-location);
-    3) otherwise build, write bucketed, register, stamp.
-
-    ``source_stamp`` (from _source_stamp) keys the at-rest table to its
-    source's (mtime, size): a corpus rewritten in place at the same
-    sf_dir rebuilds the index instead of serving stale rows."""
+    """A bucketed table derived from ``sf_dir``'s documents, built at most
+    once per documents version (memo.sidecar). Bucket ids live in file
+    names, so when the files are current but this session's catalog
+    lacks the table, re-registering the external table with the same
+    bucket spec keeps co-location without a rebuild."""
     import os
 
     cols = (bucket_col,) if isinstance(bucket_col, str) else tuple(bucket_col)
+
+    def write(loc: str | None) -> None:
+        if spark.catalog.tableExists(name):
+            # stale: drop the (external) catalog entry; the overwrite
+            # below replaces the files
+            spark.sql(f"DROP TABLE `{name}`")
+        w = (
+            build().write.mode("overwrite")
+            .bucketBy(buckets, cols[0], *cols[1:])
+            .sortBy(cols[0], *cols[1:])
+        )
+        if loc:
+            w = w.option("path", loc)
+        w.saveAsTable(name)
+
     wh = _warehouse_path(spark)
-    loc = os.path.join(wh, name.lower()) if wh else None
-    fresh = _sidecar_fresh(loc, source_stamp) if loc else True
-    if spark.catalog.tableExists(name):
-        if fresh:
-            return spark.table(name)
-        # stale: drop the (external) catalog entry; the overwrite below
-        # replaces the files
-        spark.sql(f"DROP TABLE `{name}`")
-    if (
-        loc
-        and fresh
-        and os.path.isdir(loc)
-        and any(f.endswith(".parquet") for f in os.listdir(loc))
-    ):
+    if not wh:
+        if not spark.catalog.tableExists(name):
+            write(None)
+        return spark.table(name)
+    loc = os.path.join(wh, name.lower())
+    stamp = memo.source_stamp(os.path.join(sf_dir, "documents.parquet"))
+    rebuilt = memo.sidecar(spark, loc, stamp, write)
+    if not rebuilt and not spark.catalog.tableExists(name):
         schema = spark.read.parquet(loc).schema
         ddl = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
         clause = ", ".join(cols)
@@ -176,18 +138,6 @@ def _ensure_bucketed(
             f"CLUSTERED BY ({clause}) SORTED BY ({clause}) "
             f"INTO {buckets} BUCKETS LOCATION '{loc}'"
         )
-        return spark.table(name)
-    df = build()
-    w = (
-        df.write.mode("overwrite")
-        .bucketBy(buckets, cols[0], *cols[1:])
-        .sortBy(cols[0], *cols[1:])
-    )
-    if loc:
-        w = w.option("path", loc)
-    w.saveAsTable(name)
-    if loc:
-        _write_source_stamp(loc, source_stamp)
     return spark.table(name)
 
 
@@ -198,22 +148,21 @@ def index_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     index build at write/compaction time (FullTextIndex is a storage-layer
     index, not a per-query structure)."""
     tag = _sf_tag(sf_dir)
-    stamp = _source_stamp(sf_dir, "documents")
     postings = _ensure_bucketed(
         spark,
+        sf_dir,
         f"ft_postings_{tag}",
         lambda: build_postings(load_table(spark, sf_dir, "documents")),
         "term",
         64,
-        source_stamp=stamp,
     )
     doclen = _ensure_bucketed(
         spark,
+        sf_dir,
         f"ft_doclen_{tag}",
         lambda: build_doc_lengths(spark.table(f"ft_postings_{tag}")),
         "doc_id",
         16,
-        source_stamp=stamp,
     )
     return postings, doclen
 
@@ -234,13 +183,10 @@ def corpus_stats(spark: SparkSession, sf_dir: str, doclen: DataFrame) -> DataFra
     if not wh:
         return agg()
     loc = os.path.join(wh, f"ft_stats_{_sf_tag(sf_dir)}")
-    stamp = _source_stamp(sf_dir, "documents")
-    if not os.path.isdir(loc) or not _sidecar_fresh(loc, stamp):
-        agg().coalesce(1).write.mode("overwrite").parquet(loc)
-        _write_source_stamp(loc, stamp)
-        spark.catalog.refreshByPath(loc)
-    from tiflash_spark.catalog import read_parquet_memo
-
+    memo.sidecar(
+        spark, loc, memo.source_stamp(os.path.join(sf_dir, "documents.parquet")),
+        lambda loc: agg().coalesce(1).write.mode("overwrite").parquet(loc),
+    )
     return read_parquet_memo(spark, loc)
 
 

@@ -25,7 +25,8 @@ import os as _os
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from tiflash_spark.catalog import load_table
+from tiflash_spark import memo
+from tiflash_spark.catalog import load_table, read_parquet_memo
 from tiflash_spark.functions.vector import (
     vec_cosine_similarity,
     vec_inner_product,
@@ -80,14 +81,8 @@ def _query_literals(spark: SparkSession, sf_dir: str) -> tuple[list[float], floa
     Python). Callers fold the vector back in as a from_json literal and
     the norm as F.lit — removing the per-build broadcast job and the
     BroadcastNestedLoopJoin the 1-row crossJoin planned (the r10
-    quantized-ANN cure, applied to the IVF family in r11).
-
-    literal_memo (r11): the fetch itself was still one job per query
-    BUILD; the (vector, norm) pair is now memoized per embeddings
-    parquet (mtime, size), so repeated builds skip the job entirely."""
-    import os
-
-    from tiflash_spark.catalog import literal_memo
+    quantized-ANN cure, applied to the IVF family in r11). The pair is
+    memoized per embeddings version, so repeated builds skip the job."""
 
     def fetch():
         e = load_table(spark, sf_dir, "embeddings")
@@ -103,9 +98,8 @@ def _query_literals(spark: SparkSession, sf_dir: str) -> tuple[list[float], floa
             )
         return list(qrow.qv), float(qrow.qn)
 
-    return literal_memo(
-        os.path.join(sf_dir, "embeddings.parquet"), "query_literals", fetch
-    )
+    emb = _os.path.join(sf_dir, "embeddings.parquet")
+    return memo.cached("query_literals", emb, (emb,), fetch)
 
 
 def _cos_prenorm(a: Column, b: Column, b_norm: Column) -> Column:
@@ -451,40 +445,54 @@ def vector_index(
     Partitioning by cluster means an n-probe query prunes non-probed
     clusters at FILE LISTING time (PartitionFilters in the scan), the
     distributed analogue of only opening the probed posting lists."""
-    import os
-
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
+    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
 
     tag = _sf_tag(sf_dir)
     wh = _warehouse_path(spark)
     e = load_table(spark, sf_dir, "embeddings")
     if wh:
-        cloc = os.path.join(wh, f"ivf_cents_{tag}")
-        aloc = os.path.join(wh, f"ivf_assign_{tag}")
-        stamp = _source_stamp(sf_dir, "embeddings")
-        fresh = _sidecar_fresh(cloc, stamp) and _sidecar_fresh(aloc, stamp)
-        if not (os.path.isdir(cloc) and os.path.isdir(aloc)) or not fresh:
-            cents = refine_centroids(e, _centroids(e), iterations=2)
-            cents.coalesce(1).write.mode("overwrite").parquet(cloc)
-            _assign(e, spark.read.parquet(cloc)).write.mode(
+        cloc = _os.path.join(wh, f"ivf_cents_{tag}")
+        aloc = _os.path.join(wh, f"ivf_assign_{tag}")
+        stamp = memo.source_stamp(_os.path.join(sf_dir, "embeddings.parquet"))
+        memo.sidecar(
+            spark, cloc, stamp,
+            lambda loc: refine_centroids(e, _centroids(e), iterations=2)
+            .coalesce(1).write.mode("overwrite").parquet(loc),
+        )
+        # the assignment derives from the centroid dir (whose mtime moves
+        # on every rebuild), so it is rebuilt whenever the centroids are
+        memo.sidecar(
+            spark, aloc, memo.source_stamp(cloc),
+            lambda loc: _assign(e, spark.read.parquet(cloc)).write.mode(
                 "overwrite"
-            ).partitionBy("cluster").parquet(aloc)
-            _write_source_stamp(cloc, stamp)
-            _write_source_stamp(aloc, stamp)
-            spark.catalog.refreshByPath(cloc)
-            spark.catalog.refreshByPath(aloc)
-        from tiflash_spark.catalog import read_parquet_memo
-
+            ).partitionBy("cluster").parquet(loc),
+        )
         return read_parquet_memo(spark, cloc), read_parquet_memo(spark, aloc)
     # no local warehouse (remote URI session): build inline, same plan shape
     cents = refine_centroids(e, _centroids(e), iterations=2).persist()
     return cents, _assign(e, cents)
+
+
+def _probe_ids(sf_dir: str, cents: DataFrame, qv: Column) -> list[int]:
+    """The N_PROBE centroids nearest the query — index navigation (which
+    clusters to scan), memoized per embeddings version like the query
+    literals so repeated builds skip the 16-row job."""
+    emb = _os.path.join(sf_dir, "embeddings.parquet")
+    return memo.cached(
+        "ivf_probe_ids",
+        emb,
+        (emb,),
+        lambda: [
+            r.cid
+            for r in cents.withColumn(
+                "qdist", vec_l2_distance(F.col("cvec"), qv)
+            )
+            .orderBy(F.col("qdist").asc(), F.col("cid").asc())
+            .limit(N_PROBE)
+            .select("cid")
+            .collect()
+        ],
+    )
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,25 +513,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, assigned = vector_index(spark, sf_dir)
     qv_list, qn = _query_literals(spark, sf_dir)
     qv = _fold_json_literal(qv_list, "array<double>")
-    # probe selection stays index navigation (which clusters to scan);
-    # memoized like the query literals so repeated builds skip the
-    # 16-row job (literal_memo keys on embeddings (mtime, size))
-    from tiflash_spark.catalog import literal_memo as _literal_memo
-
-    probe_ids = _literal_memo(
-        _os.path.join(sf_dir, "embeddings.parquet"),
-        "ivf_probe_ids",
-        lambda: [
-            r.cid
-            for r in cents.withColumn(
-                "qdist", vec_l2_distance(F.col("cvec"), qv)
-            )
-            .orderBy(F.col("qdist").asc(), F.col("cid").asc())
-            .limit(N_PROBE)
-            .select("cid")
-            .collect()
-        ],
-    )
+    probe_ids = _probe_ids(sf_dir, cents, qv)
     cands = assigned.where(
         F.col("cluster").isin(probe_ids) & (F.col("vec_id") != 0)
     )
@@ -781,28 +771,18 @@ def centroid_graph(spark: SparkSession, sf_dir: str, cents: DataFrame) -> dict:
     """The persisted NSW graph sidecar (ivf_graph_{tag}) — built with the
     index by the DISTRIBUTED banded kNN join (build_centroid_graph_df),
     read as (cid, neighbors) rows, broadcast-sized by design. The
-    sidecar carries a fingerprint of the centroid set (_FINGERPRINT,
-    Spark ignores underscore files) and rebuilds on mismatch."""
-    import os
-
+    sidecar is stamped with a fingerprint of the centroid set and
+    rebuilds on mismatch."""
     from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
 
     wh = _warehouse_path(spark)
     if wh:
-        gloc = os.path.join(wh, f"ivf_graph_{_sf_tag(sf_dir)}")
-        fp_path = os.path.join(gloc, "_FINGERPRINT")
-        fp = _centroid_fingerprint(cents)
-        stale = True
-        if os.path.isdir(gloc) and os.path.exists(fp_path):
-            with open(fp_path) as fh:
-                stale = fh.read().strip() != fp
-        if stale:
-            build_centroid_graph_df(spark, cents).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(gloc)
-            with open(fp_path, "w") as fh:
-                fh.write(fp)
-            spark.catalog.refreshByPath(gloc)
+        gloc = _os.path.join(wh, f"ivf_graph_{_sf_tag(sf_dir)}")
+        memo.sidecar(
+            spark, gloc, _centroid_fingerprint(cents),
+            lambda loc: build_centroid_graph_df(spark, cents).coalesce(1)
+            .write.mode("overwrite").parquet(loc),
+        )
         rows = spark.read.parquet(gloc).collect()
         return {int(r.cid): [int(n) for n in r.neighbors] for r in rows}
     return {
@@ -898,27 +878,18 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per sf beside the IVF index (the codebook lives with the index in
     any real vector store), so the query pays a 1-row read, not a
     corpus pass."""
-    import os
+    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
 
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
-
+    emb_path = _os.path.join(sf_dir, "embeddings.parquet")
     e = load_table(spark, sf_dir, "embeddings")
     wh = _warehouse_path(spark)
     if wh:
-        sloc = os.path.join(wh, f"quant_scales_{_sf_tag(sf_dir)}")
-        stamp = _source_stamp(sf_dir, "embeddings")
-        if not os.path.isdir(sloc) or not _sidecar_fresh(sloc, stamp):
-            _quant_scales(e).coalesce(1).write.mode("overwrite").parquet(sloc)
-            _write_source_stamp(sloc, stamp)
-            spark.catalog.refreshByPath(sloc)
-        from tiflash_spark.catalog import read_parquet_memo
-
+        sloc = _os.path.join(wh, f"quant_scales_{_sf_tag(sf_dir)}")
+        memo.sidecar(
+            spark, sloc, memo.source_stamp(emb_path),
+            lambda loc: _quant_scales(e).coalesce(1).write.mode("overwrite")
+            .parquet(loc),
+        )
         scales = read_parquet_memo(spark, sloc)
     else:
         scales = _quant_scales(e)
@@ -931,10 +902,6 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round-trips the doubles exactly and the arithmetic is unchanged).
     # The dim-64 literal is ~1.5 kB — index metadata in the plan, exactly
     # like the PQ LUT.
-    from tiflash_spark.catalog import literal_memo
-
-    _emb_path = os.path.join(sf_dir, "embeddings.parquet")
-
     def _fetch_scales():
         srow = scales.first()
         if srow is None or srow.mins is None or srow.maxs is None:
@@ -943,10 +910,12 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return list(srow.mins), list(srow.maxs)
 
-    # literal_memo (r11): the 1-row fetches below still cost one tiny job
-    # per query BUILD each; both rows derive from embeddings.parquet, so
-    # they memo on its (mtime, size) like every other sidecar.
-    s_mins, s_maxs = literal_memo(_emb_path, "quant_scales_row", _fetch_scales)
+    # the 1-row fetches below would cost one tiny job per query BUILD
+    # each; both rows derive from embeddings.parquet, so they are
+    # memoized per embeddings version.
+    s_mins, s_maxs = memo.cached(
+        "quant_scales_row", emb_path, (emb_path,), _fetch_scales
+    )
     mins = _fold_json_literal(s_mins, "array<double>")
     maxs = _fold_json_literal(s_maxs, "array<double>")
     # the query ROW folds the same way (r10 session 4): its dequantized /
@@ -980,7 +949,9 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return list(qrow.qv_q), list(qrow.qv), float(qrow.qn_q), float(qrow.qn)
 
-    l_qv_q, l_qv, qn_q, qn = literal_memo(_emb_path, "quant_qrow", _fetch_qrow)
+    l_qv_q, l_qv, qn_q, qn = memo.cached(
+        "quant_qrow", emb_path, (emb_path,), _fetch_qrow
+    )
     qv_q = _fold_json_literal(l_qv_q, "array<double>")
     qv = _fold_json_literal(l_qv, "array<double>")
 
@@ -1077,25 +1048,7 @@ def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents, assigned = vector_index(spark, sf_dir)
     qv_list, qn = _query_literals(spark, sf_dir)
     qv = _fold_json_literal(qv_list, "array<double>")
-    # probe selection stays index navigation (which clusters to scan);
-    # memoized like the query literals so repeated builds skip the
-    # 16-row job (literal_memo keys on embeddings (mtime, size))
-    from tiflash_spark.catalog import literal_memo as _literal_memo
-
-    probe_ids = _literal_memo(
-        _os.path.join(sf_dir, "embeddings.parquet"),
-        "ivf_probe_ids",
-        lambda: [
-            r.cid
-            for r in cents.withColumn(
-                "qdist", vec_l2_distance(F.col("cvec"), qv)
-            )
-            .orderBy(F.col("qdist").asc(), F.col("cid").asc())
-            .limit(N_PROBE)
-            .select("cid")
-            .collect()
-        ],
-    )
+    probe_ids = _probe_ids(sf_dir, cents, qv)
     cands = (
         assigned.where(F.col("cluster").isin(probe_ids) & (F.col("vec_id") != 0))
         .select(
@@ -1380,77 +1333,62 @@ def pq_index(spark: SparkSession, sf_dir: str):
     (vec_id, label, codes array<int> of PQ_M 4-bit ids). One
     mapInPandas encode pass at build time, then every query reads the
     tiny code table (PQ_M ints per vector) instead of the embeddings."""
-    import json
-    import os
-
     import numpy as np
     import pandas as pd
 
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
+    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
 
-    tag = _sf_tag(sf_dir)
-    wh = _warehouse_path(spark)
-    bloc = os.path.join(wh, f"pq_books_{tag}.json") if wh else None
-    cloc = os.path.join(wh, f"pq_codes_{tag}") if wh else None
-    # books and codes share the codes dir's source stamp: a corpus
-    # rewritten in place retrains BOTH (stale codebooks would silently
-    # skew every ADC score)
-    stamp = _source_stamp(sf_dir, "embeddings")
-    fresh = _sidecar_fresh(cloc, stamp)
-    if bloc and os.path.exists(bloc) and fresh:
-        # codebooks persisted with the code table: a query session pays
-        # one small JSON read, never a retrain (the reference reads its
-        # index metadata the same way — built once at write time)
-        with open(bloc) as fh:
-            books = [np.array(b) for b in json.load(fh)]
-    else:
-        books = _pq_train(spark, sf_dir)
-        if bloc:
-            tmp = bloc + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump([b.tolist() for b in books], fh)
-            os.replace(tmp, bloc)
+    def codes_of(books) -> DataFrame:
+        def encode(batches):
+            bs = [np.asarray(b) for b in books]
+            dsub = bs[0].shape[1]
+            for pdf in batches:
+                v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+                v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
+                codes = np.empty((len(v), PQ_M), dtype=np.int32)
+                for m in range(PQ_M):
+                    sub = v[:, m * dsub:(m + 1) * dsub]
+                    d2 = ((sub[:, None, :] - bs[m][None, :, :]) ** 2).sum(axis=2)
+                    codes[:, m] = d2.argmin(axis=1)
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"],
+                        "label": pdf["label"],
+                        "codes": list(codes.tolist()),
+                    }
+                )
 
-    def encode(batches):
-        bs = [np.asarray(b) for b in books]
-        dsub = bs[0].shape[1]
-        for pdf in batches:
-            v = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            v /= np.maximum(np.linalg.norm(v, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(v), PQ_M), dtype=np.int32)
-            for m in range(PQ_M):
-                sub = v[:, m * dsub:(m + 1) * dsub]
-                d2 = ((sub[:, None, :] - bs[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "codes": list(codes.tolist()),
-                }
-            )
-
-    def build():
         e = load_table(spark, sf_dir, "embeddings")
         return e.mapInPandas(
             encode, schema="vec_id long, label int, codes array<int>"
         )
 
-    if wh:
-        if not os.path.isdir(cloc) or not fresh:
-            build().write.mode("overwrite").parquet(cloc)
-            _write_source_stamp(cloc, stamp)
-            spark.catalog.refreshByPath(cloc)
-        from tiflash_spark.catalog import read_parquet_memo
+    wh = _warehouse_path(spark)
+    if not wh:
+        books = _pq_train(spark, sf_dir)
+        return books, codes_of(books)
+    cloc = _os.path.join(wh, f"pq_index_{_sf_tag(sf_dir)}")
+    # the codebooks live INSIDE the codes dir, under its stamp: a corpus
+    # rewritten in place retrains both (stale codebooks would silently
+    # skew every ADC score)
+    bloc = _os.path.join(cloc, "_books.json")
 
-        return books, read_parquet_memo(spark, cloc)
-    return books, build()
+    def write(loc: str) -> None:
+        books = _pq_train(spark, sf_dir)
+        codes_of(books).write.mode("overwrite").parquet(loc)
+        with open(bloc, "w") as fh:
+            _json.dump([b.tolist() for b in books], fh)
+
+    memo.sidecar(
+        spark, cloc, memo.source_stamp(_os.path.join(sf_dir, "embeddings.parquet")),
+        write,
+    )
+    # a query session pays one small JSON read, never a retrain (the
+    # reference reads its index metadata the same way — built once at
+    # write time)
+    with open(bloc) as fh:
+        books = [np.array(b) for b in _json.load(fh)]
+    return books, read_parquet_memo(spark, cloc)
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,37 +14,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tiflash_spark.catalog import load_table
+from tiflash_spark import memo
+from tiflash_spark.catalog import load_table, read_parquet_memo
 
 STOPWORDS = ("the", "a", "of", "and", "to")
 
-# --- prepared expressions -----------------------------------------------------
 # Deep higher-order-function trees (word_grams' zip_with chain,
 # top_word_frac's aggregate fold) cost hundreds of py4j round-trips to
 # CONSTRUCT — measured 0.3-0.4 s of pure driver time per query build for
-# the curation keep rule alone, the dominant term of the anti-scaling
-# (8c/32c < 1) query builds the r10 verdict called out. The trees are
-# CONSTANT per (helper, input column name, params): unresolved Catalyst
-# expressions are immutable, so one instance can appear in any number of
-# plans (Catalyst copies on transform). This memo holds expression
-# STRUCTURE only — never data, never results; it is the expression-side
-# analogue of catalog.read_parquet_memo. Keyed by the live py4j gateway
-# so a fresh JVM invalidates entries.
-
-_PREPARED: dict = {}
-
-
-def prepared(key: tuple, build):
-    """Memoized constant expression tree(s): ``build()`` may return one
-    Column or a tuple of Columns; whatever it returns is reused verbatim
-    on later builds in the same JVM."""
-    from pyspark import SparkContext
-
-    k = (id(SparkContext._gateway),) + key if SparkContext._gateway else key
-    c = _PREPARED.get(k)
-    if c is None:
-        c = _PREPARED[k] = build()
-    return c
+# the curation keep rule alone. The trees are constant per (helper, input
+# column, params), so query builders construct them once through
+# memo.expr and reuse them in every later plan.
 
 
 def scan_underparallelized(df, parallelism: int) -> bool:
@@ -218,11 +198,7 @@ def ws_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw explode is the dominant cost, and each query should pay the
     (pre-aggregated, ~10× smaller) doc-term table instead. tok-bucketing
     makes the vocabulary groupBy and any term join exchange-free."""
-    from tiflash_spark.pipeline.fulltext import (
-        _ensure_bucketed,
-        _sf_tag,
-        _source_stamp,
-    )
+    from tiflash_spark.pipeline.fulltext import _ensure_bucketed, _sf_tag
 
     def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
@@ -233,8 +209,7 @@ def ws_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return _ensure_bucketed(
-        spark, f"ws_tokens_{_sf_tag(sf_dir)}", build, "tok", 32,
-        source_stamp=_source_stamp(sf_dir, "documents"),
+        spark, sf_dir, f"ws_tokens_{_sf_tag(sf_dir)}", build, "tok", 32
     )
 
 
@@ -461,6 +436,24 @@ def mean_word_len(toks: Column) -> Column:
     ) / F.size(toks)
 
 
+# The Gopher-shape keep rule's thresholds, adapted to this corpus's
+# length scale: token-count window, mean-word-length window, top-word
+# cap, duplicate-trigram cap.
+QUALITY_THRESHOLDS = (10, 100_000, 3, 10, 0.2, 0.2)
+
+
+def quality_keep(n: Column, mwl: Column, twf: Column, dup3: Column) -> Column:
+    """The keep rule over staged (or inline) signal columns, in the order
+    the conjunction short-circuits: cheap length windows first."""
+    n_lo, n_hi, mwl_lo, mwl_hi, twf_max, dup3_max = QUALITY_THRESHOLDS
+    return (
+        (n >= n_lo) & (n <= n_hi)
+        & (mwl >= mwl_lo) & (mwl <= mwl_hi)
+        & (twf <= twf_max)
+        & (dup3 <= dup3_max)
+    )
+
+
 def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition/quality signals + the conjunctive keep rule
     (thresholds adapted to this corpus's length scale; the rule SHAPE is
@@ -483,7 +476,7 @@ def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codegen subexpression elimination does not share subtrees inside
     # conditional branches, so the flat form rebuilt each gram array ~3×
     # per row (the dup_gram_frac note; same staging as text_analysis).
-    # The staged projection is CONSTANT → prepared() per JVM (guide §5).
+    # The staged projection is constant → built once (memo.expr).
     def _build_sig_cols():
         w = F.col("w")
         n = F.when(
@@ -498,7 +491,7 @@ def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     sig = d.select(
-        "doc_id", "source", *prepared(("quality_signals", "sig_cols"), _build_sig_cols)
+        "doc_id", "source", *memo.expr(("quality_signals", "sig_cols"), _build_sig_cols)
     ).select(
         "doc_id",
         "source",
@@ -508,12 +501,7 @@ def quality_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_frac_of(F.col("_g3")).alias("_dup3"),
         "_mwl",
     )
-    keep = (
-        (F.col("_n") >= 10) & (F.col("_n") <= 100_000)
-        & (F.col("_mwl") >= 3) & (F.col("_mwl") <= 10)
-        & (F.col("_twf") <= 0.2)
-        & (F.col("_dup3") <= 0.2)
-    )
+    keep = quality_keep(F.col("_n"), F.col("_mwl"), F.col("_twf"), F.col("_dup3"))
     return sig.select(
         "doc_id",
         "source",
@@ -605,13 +593,7 @@ def _lm_vocab_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import Window
 
-    from tiflash_spark.pipeline.fulltext import (
-        _sf_tag,
-        _sidecar_fresh,
-        _source_stamp,
-        _warehouse_path,
-        _write_source_stamp,
-    )
+    from tiflash_spark.pipeline.fulltext import _sf_tag, _warehouse_path
 
     t = ws_token_table(spark, sf_dir)
     vocab = (
@@ -635,13 +617,10 @@ def _lm_vocab_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not wh:
         return probs
     loc = os.path.join(wh, f"lm_vocab_{_sf_tag(sf_dir)}")
-    stamp = _source_stamp(sf_dir, "documents")
-    if not os.path.isdir(loc) or not _sidecar_fresh(loc, stamp):
-        probs.coalesce(1).write.mode("overwrite").parquet(loc)
-        _write_source_stamp(loc, stamp)
-        spark.catalog.refreshByPath(loc)
-    from tiflash_spark.catalog import read_parquet_memo
-
+    memo.sidecar(
+        spark, loc, memo.source_stamp(os.path.join(sf_dir, "documents.parquet")),
+        lambda loc: probs.coalesce(1).write.mode("overwrite").parquet(loc),
+    )
     return read_parquet_memo(spark, loc)
 
 
@@ -852,7 +831,7 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.withColumn("w", tokens(F.lower(F.col("text"))))
 
     # the model is a CONSTANT expression tree (one filter-lambda per
-    # weight — dozens of py4j calls); prepared() once per JVM (guide §5)
+    # weight — dozens of py4j calls); built once per model (memo.expr)
     def _build_model_cols():
         w = F.col("w")
         dl = F.when(
@@ -876,8 +855,10 @@ def quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             (logit >= 0).alias("keep"),
         )
 
-    dl_c, logit_c, score_c, keep_c = prepared(
-        ("quality_model_score", "model_cols"), _build_model_cols
+    dl_c, logit_c, score_c, keep_c = memo.expr(
+        ("quality_model_score", "model_cols",
+         tuple(QUALITY_MODEL_WEIGHTS), QUALITY_MODEL_BIAS),
+        _build_model_cols,
     )
     return d.select("doc_id", "source", dl_c, logit_c, score_c, keep_c)
 

@@ -62,20 +62,8 @@ def exchange_count(df: DataFrame) -> int:
     return len(ids)
 
 
-def assert_scan_pruned(df: DataFrame, table_cols: dict[str, int]) -> None:
-    """Assert no scan reads more columns than declared necessary."""
-    for schema in read_schemas(df):
-        ncols = len(schema.split(",")) if schema else 0
-        assert ncols <= max(table_cols.values()), f"unpruned scan: {schema}"
-
-
 def has_filter_pushdown(df: DataFrame) -> bool:
     return any(f.strip() for f in pushed_filters(df))
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    """Count WholeStageCodegen spans — wider is better (fewer breaks)."""
-    return len(set(re.findall(r"WholeStageCodegen \((\d+)\)", formatted_plan(df))))
 
 
 def execution_profile(df: DataFrame) -> list[dict]:

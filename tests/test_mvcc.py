@@ -363,3 +363,113 @@ def test_store_type_roundtrip_matrix(spark, tmp_path):
     assert s2.read().count() == 3
     back = {r.c_i for r in s2.read().collect()}
     assert back == {2**31 - 1, -(2**31), None}
+
+
+def test_handle_only_delete_keeps_upsert_columns(spark, tmp_path):
+    """A manifest-less store's delta holds a full upsert file next to a
+    handle-only tombstone file: the read must merge both footers, never
+    take its columns from whichever file is listed first."""
+    for i in range(8):
+        store = DeltaStore(spark, str(tmp_path / f"hdel{i}"))
+        store.write_batch(
+            spark.createDataFrame([(h, h * 10) for h in range(6)], f"{HANDLE} long, x long"),
+            version=1,
+        )
+        store.write_batch(
+            spark.createDataFrame([(2,)], f"{HANDLE} long"), version=2, delete=True
+        )
+        got = {r[HANDLE]: r["x"] for r in store.read().collect()}
+        assert got == {h: h * 10 for h in range(6) if h != 2}, i
+
+
+def test_unreadable_nonempty_layer_raises(spark, tmp_path):
+    """Only a layer with no data file reads as empty; a stable layer whose
+    files cannot be read is an error, not a silently empty table."""
+    import os
+
+    store = DeltaStore(spark, str(tmp_path / "bad"))
+    assert store._layer("stable") is None and store._layer("delta") is None
+    store.write_batch(
+        spark.createDataFrame([(1, "a"), (2, "b")], f"{HANDLE} long, v string"), version=1
+    )
+    store.compact(1)
+    assert store._layer("delta") is None
+    for root, _dirs, files in os.walk(store.stable_path()):
+        for f in files:
+            if not f.startswith(("_", ".")):
+                with open(os.path.join(root, f), "wb") as fh:
+                    fh.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        store.read().collect()
+
+
+@pytest.mark.parametrize("htype", ["long", "string"])
+def test_point_read_prunes_segments_at_plan_time(spark, tmp_path, htype):
+    """read_handles folds the write-time segment hash of each literal
+    handle: the plan carries the segment ids as PartitionFilters literals
+    (no hash left to evaluate, no job to compute them)."""
+    import re
+
+    keys = [f"k{h:03d}" if htype == "string" else h for h in range(60)]
+    store = DeltaStore(spark, str(tmp_path / f"pt_{htype}"))
+    store.write_batch(
+        spark.createDataFrame([(k, i) for i, k in enumerate(keys)], f"{HANDLE} {htype}, v long"),
+        version=1,
+    )
+    store.compact(1, num_segments=8)
+    store.write_batch(
+        spark.createDataFrame([(keys[7], -1)], f"{HANDLE} {htype}, v long"), version=2
+    )
+    want_keys = [keys[3], keys[7], keys[41], keys[58]]
+    want_segs = {
+        r.s
+        for r in spark.createDataFrame([(k,) for k in want_keys], f"{HANDLE} {htype}")
+        .select(F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(8)).alias("s"))
+        .collect()
+    }
+    df = store.read_handles(want_keys)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    stable_scan = [ln for ln in plan.splitlines() if "_seg#" in ln and "FileScan" in ln]
+    assert len(stable_scan) == 1
+    pf = stable_scan[0].split("PartitionFilters: [", 1)[1].split("]", 1)[0]
+    assert "xxhash64" not in pf
+    in_list = re.search(r"_seg#\d+ IN \(([\d,]+)\)", pf)
+    assert in_list and {int(x) for x in in_list.group(1).split(",")} == want_segs
+    full = store.read()
+    assert sorted(map(tuple, df.collect())) == sorted(
+        map(tuple, full.filter(F.col(HANDLE).isin(*want_keys)).collect())
+    )
+    assert {r[HANDLE]: r.v for r in df.collect()}[keys[7]] == -1
+
+
+def test_footer_rows_match_spark_counts(spark, tmp_path):
+    """delta_rows and the compaction/ingest counts come from parquet
+    footers; they equal Spark's counts, tombstones included."""
+    from tiflash_spark.sources.delta_store import _footer_rows
+
+    store = DeltaStore(spark, str(tmp_path / "foot"))
+    store.write_batch(
+        spark.createDataFrame([(h, h) for h in range(30)], f"{HANDLE} long, v long"),
+        version=1,
+    )
+    store.write_batch(
+        spark.createDataFrame([(h, h) for h in range(5)], f"{HANDLE} long, v long"),
+        version=2,
+        delete=True,
+    )
+    assert store.delta_rows() == 35 == spark.read.parquet(store.delta_path()).count()
+    kept = store.compact(2, num_segments=4)
+    assert kept == 25 == spark.read.parquet(store.stable_path()).count()
+    assert store.delta_rows() == 0
+    store.write_batch(
+        spark.createDataFrame([(7, 7)], f"{HANDLE} long, v long"), version=3, delete=True
+    )
+    assert store.delta_rows() == 1
+    n = store.ingest_snapshot(
+        spark.createDataFrame([(h, h) for h in range(100, 140)], f"{HANDLE} long, v long"),
+        version=4,
+    )
+    assert n == 40
+    stable = spark.read.parquet(store.stable_path())
+    assert _footer_rows(store.stable_path()) == stable.count() == 65
+    assert store.compact_range_segments(4, 3) == store.read().count() == 64

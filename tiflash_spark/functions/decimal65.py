@@ -90,7 +90,7 @@ def canon(x, p: int, s: int) -> str | None:
 
 def register_decimal65_udfs(spark) -> list[str]:
     """Register the dec65_* SQL functions (Arrow-batched pandas UDFs +
-    one grouped-agg). Called from register_mysql_functions."""
+    one grouped-agg). Called by sql_registry when a statement names one."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")

@@ -9,11 +9,23 @@ directly. SQL UDFs are inlined into the plan by Catalyst (no Python, no
 serialization — they stay in whole-stage codegen), unlike spark.udf
 registrations.
 
+Registration is per statement, like the reference's by-name lookup at
+plan-compile time: ``ensure_functions(spark, text)`` registers only the
+registry names ``text`` calls, plus the registry functions their bodies
+call, and remembers them on the session. Each CREATE parses and analyzes
+its body, so registering all 99 SQL bodies up front costs seconds on a
+cold JVM. ``register_mysql_functions`` registers everything (the
+``open_catalog`` contract). The same name table covers the Arrow-batched
+Python UDFs (json, string, regexp, dec65), one registrar per group.
+
 Python-side Column helpers stay in mysql_compat/json_fns; this is the
 spark.sql-surface rendering of the same semantics.
 """
 
 from __future__ import annotations
+
+import importlib
+import re
 
 from pyspark.sql import SparkSession
 
@@ -948,27 +960,108 @@ MYSQL_SQL_FUNCTIONS: dict[str, tuple[str, str, str]] = {
 }
 
 
+# Arrow-batched Python UDFs: registrar (module, function) -> the names it
+# registers. One registrar registers its whole group.
+_UDF_GROUPS: dict[tuple[str, str], tuple[str, ...]] = {
+    ("mysql_json", "register_json_udfs"): (
+        "mysql_json_extract", "mysql_json_keys", "mysql_json_contains_path",
+        "mysql_cast_json",
+    ),
+    ("mysql_json", "register_string_udfs"): ("mysql_substring_index",),
+    ("mysql_regexp", "register_regexp_udfs"): (
+        "mysql_regexp_instr", "mysql_regexp_substr", "mysql_regexp_replace",
+    ),
+    ("decimal65", "register_decimal65_udfs"): (
+        "dec65_canon", "dec65_norm", "dec65_mod", "dec65_round",
+        "dec65_truncate", "dec65_abs", "dec65_format", "dec65_sum",
+        "dec65_limb", "dec65_sum_fin", "dec65_sortkey", "dec65_sum_arr",
+        "dec65_avg_arr", "dec65_avg_fin", "dec65_add", "dec65_sub",
+        "dec65_mul", "dec65_div",
+    ),
+}
+
+_UDF_NAMES = [n for names in _UDF_GROUPS.values() for n in names]
+# registration order: SQL bodies in dict order (a body only calls names
+# defined before it), then the Python UDFs
+_ORDER = {n: i for i, n in enumerate([*MYSQL_SQL_FUNCTIONS, *_UDF_NAMES])}
+
+# a call of a registry name: `name(` or `` `name`( ``, any case
+_CALL = re.compile(
+    r"(?<![\w$`])`?("
+    + "|".join(sorted(_ORDER, key=len, reverse=True))
+    + r")`?\s*\(",
+    re.IGNORECASE,
+)
+
+
+def called_names(text: str) -> set[str]:
+    """Registry names ``text`` calls (not their dependencies)."""
+    return {m.group(1).lower() for m in _CALL.finditer(text)}
+
+
+def _closures() -> dict[str, frozenset[str]]:
+    """name -> every registry name it needs registered first (itself
+    included), from the bodies; a Python UDF needs its whole group, which
+    one registrar call registers."""
+    memo: dict[str, frozenset[str]] = {}
+
+    def close(name: str) -> frozenset[str]:
+        if name not in memo:
+            deps = called_names(MYSQL_SQL_FUNCTIONS[name][2]) - {name}
+            memo[name] = frozenset({name}).union(*map(close, deps))
+        return memo[name]
+
+    for name in MYSQL_SQL_FUNCTIONS:
+        close(name)
+    for names in _UDF_GROUPS.values():
+        memo.update(dict.fromkeys(names, frozenset(names)))
+    return memo
+
+
+CLOSURE = _closures()
+_GROUP_OF = {n: g for g, names in _UDF_GROUPS.items() for n in names}
+
+
+def _registered(spark: SparkSession) -> set[str]:
+    """Names registered on this session (lives on the session object)."""
+    done = getattr(spark, "_tiflash_functions", None)
+    if done is None:
+        done = spark._tiflash_functions = set()
+    return done
+
+
+def _register(spark: SparkSession, names: set[str]) -> None:
+    done = _registered(spark)
+    for name in sorted(names - done, key=_ORDER.__getitem__):
+        if name in done:  # registered with an earlier name's group
+            continue
+        if name in MYSQL_SQL_FUNCTIONS:
+            sig, ret, body = MYSQL_SQL_FUNCTIONS[name]
+            spark.sql(
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
+                f"RETURNS {ret} RETURN {body}"
+            )
+            done.add(name)
+        else:
+            module, fn = _GROUP_OF[name]
+            mod = importlib.import_module(f"tiflash_spark.functions.{module}")
+            done.update(getattr(mod, fn)(spark))
+
+
+def ensure_functions(spark: SparkSession, text: str) -> list[str]:
+    """Register the registry functions ``text`` calls, with everything
+    their bodies call, before ``text`` reaches Spark's parser. Names this
+    session already has are skipped. Returns the names registered now."""
+    need = set().union(*(CLOSURE[n] for n in called_names(text)))
+    done = _registered(spark)
+    before = set(done)
+    if need - done:
+        _register(spark, need)
+    return sorted(done - before, key=_ORDER.__getitem__)
+
+
 def register_mysql_functions(spark: SparkSession) -> list[str]:
-    """Register the MySQL-name surface as temporary SQL functions on this
-    session. Returns the registered names."""
-    names = []
-    for name, (sig, ret, body) in MYSQL_SQL_FUNCTIONS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
-            f"RETURNS {ret} RETURN {body}"
-        )
-        names.append(name)
-    from tiflash_spark.functions.mysql_json import (
-        register_json_udfs,
-        register_string_udfs,
-    )
-
-    names += register_json_udfs(spark)
-    names += register_string_udfs(spark)
-    from tiflash_spark.functions.mysql_regexp import register_regexp_udfs
-
-    names += register_regexp_udfs(spark)
-    from tiflash_spark.functions.decimal65 import register_decimal65_udfs
-
-    names += register_decimal65_udfs(spark)
-    return names
+    """Register the whole MySQL-name surface as temporary functions on
+    this session. Returns every registry name."""
+    _register(spark, set(_ORDER))
+    return list(_ORDER)

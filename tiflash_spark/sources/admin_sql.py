@@ -16,6 +16,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.functions.sql_registry import ensure_functions
 from tiflash_spark.sources.delta_store import DELMARK, VERSION, DeltaStore
 
 __all__ = ["run_sql"]
@@ -4246,6 +4247,20 @@ def _collation_of(col: str, stores) -> str | None:
     return None
 
 
+def _sql(spark: SparkSession, text: str) -> DataFrame:
+    """spark.sql over engine SQL text: the registry functions it calls
+    (rewrites emit mysql_to_double, cast_signed, ...) are registered
+    first."""
+    ensure_functions(spark, text)
+    return spark.sql(text)
+
+
+def _expr(spark: SparkSession, text: str):
+    """F.expr over engine SQL text, registry functions registered first."""
+    ensure_functions(spark, text)
+    return F.expr(text)
+
+
 def _sql_with_rescues(spark: SparkSession, sql: str, stores=None) -> DataFrame:
     """spark.sql with MySQL-typing rescues: retry analysis failures that
     MySQL's implicit coercions would have accepted."""
@@ -4253,7 +4268,7 @@ def _sql_with_rescues(spark: SparkSession, sql: str, stores=None) -> DataFrame:
 
     for _ in range(6):
         try:
-            return spark.sql(sql)
+            return _sql(spark, sql)
         except AnalysisException as e:
             msg = str(e)
             new = None
@@ -4491,7 +4506,7 @@ def _sql_with_rescues(spark: SparkSession, sql: str, stores=None) -> DataFrame:
             if not new or new == sql:
                 raise
             sql = new
-    return spark.sql(sql)
+    return _sql(spark, sql)
 
 
 # session variables the SQL surface honors (MySQL semantics; reference
@@ -5012,13 +5027,6 @@ def run_sql(
     current delta folded; later writes keep MVCC semantics), re-registers
     the table view (as_view snapshots are plan-time), and returns a
     one-row result the way TiDB returns an OK packet with info."""
-    # dialect rewrites below emit registry names (mysql_to_double,
-    # cast_signed, ...) — make sure they exist on this session
-    if not getattr(spark, "_tiflash_mysql_fns", False):
-        from tiflash_spark.functions.sql_registry import register_mysql_functions
-
-        register_mysql_functions(spark)
-        spark._tiflash_mysql_fns = True
     if "`" in sql and re.search(r"`[^`'\"\n]*[^\w`'\"\n][^`'\"\n]*`", sql):
         # fuzz identifiers like `col_char(20)_key_signed` — respell
         # before ANY \w-based rewrite sees the statement
@@ -5117,7 +5125,7 @@ def run_sql(
             lambda mm: f"LIMIT {mm.group(2)} OFFSET {mm.group(1)}",
             m.group("query"),
         )
-        df = spark.sql(inner)
+        df = _sql(spark, inner)
         if m.group("analyze"):
             rows = [
                 (i, p["node"], k, int(v))
@@ -6521,7 +6529,7 @@ def run_sql(
                         )
                         + ")"
                     )
-                rows = spark.sql("SELECT * FROM VALUES " + ", ".join(typed))
+                rows = _sql(spark, "SELECT * FROM VALUES " + ", ".join(typed))
         else:
             # INSERT INTO ... SELECT — the batch is the query result
             # (reads the PLAN-TIME view snapshots, so self-inserts see
@@ -6533,7 +6541,7 @@ def run_sql(
             )
             if _ASOF.search(sel):
                 sel = _rewrite_asof(spark, sel, stores)
-            rows = spark.sql(sel)
+            rows = _sql(spark, sel)
             if re.search(r"(?i)\bwith\s+recursive\b", sel):
                 # recursive-CTE plans can't feed the parquet writer
                 # (UNSUPPORTED_INSERT.RDD_BASED) — break the lineage
@@ -6631,9 +6639,10 @@ def run_sql(
                 for c in expr65:
                     p65, s65 = td65[c]
                     batch = batch.withColumn(
-                        c, F.expr(
+                        c, _expr(
+                            spark,
                             f"dec65_canon(CAST(`{c}` AS STRING),"
-                            f" {p65}, {s65})"
+                            f" {p65}, {s65})",
                         )
                     )
                 probe65 = expr65
@@ -6645,8 +6654,9 @@ def run_sql(
             for c in present:
                 p65, s65 = td65[c]
                 batch = batch.withColumn(
-                    c, F.expr(
-                        f"dec65_canon(CAST(`{c}` AS STRING), {p65}, {s65})"
+                    c, _expr(
+                        spark,
+                        f"dec65_canon(CAST(`{c}` AS STRING), {p65}, {s65})",
                     )
                 )
             probe65 = present
@@ -6660,7 +6670,7 @@ def run_sql(
             batch = batch.observe(
                 obs65,
                 *[
-                    F.expr(_d65_wide_probe(c, td65[c][1])).alias(c)
+                    _expr(spark, _d65_wide_probe(c, td65[c][1])).alias(c)
                     for c in probe65
                 ],
             )
@@ -6722,7 +6732,7 @@ def run_sql(
             raise ValueError(f"UPDATE {name}: unknown columns {unknown}")
         matched = (
             snap.filter(
-                F.expr(_fix_collated_predicates(m.group("where"), store))
+                _expr(spark, _fix_collated_predicates(m.group("where"), store))
             )
             if m.group("where") else snap
         )
@@ -6735,7 +6745,7 @@ def run_sql(
                 out = matched.select(
                     F.col(hname).alias(HANDLE),
                     *[
-                        F.expr(sets[c]).alias(c) if c in sets else F.col(c)
+                        _expr(spark, sets[c]).alias(c) if c in sets else F.col(c)
                         for c in stored
                     ],
                 )
@@ -6750,8 +6760,8 @@ def run_sql(
                 obs65u = None
                 if upd65:
                     if getattr(store, "pcol", None) in sets:
-                        hit65 = out.selectExpr(*[
-                            _d65_wide_probe(c, d65u[c][1]) + f" AS `{c}`"
+                        hit65 = out.select(*[
+                            _expr(spark, _d65_wide_probe(c, d65u[c][1])).alias(c)
                             for c in upd65
                         ]).collect()[0]
                         _d65_mark_wide(store, upd65, hit65)
@@ -6760,7 +6770,7 @@ def run_sql(
 
                         obs65u = Observation()
                         out = out.observe(obs65u, *[
-                            F.expr(_d65_wide_probe(c, d65u[c][1])).alias(c)
+                            _expr(spark, _d65_wide_probe(c, d65u[c][1])).alias(c)
                             for c in upd65
                         ])
                 v = store.newest_version() + 1
@@ -6800,19 +6810,19 @@ def run_sql(
                         return w
 
                     moved = ~_pidx(F.col(pcol)).eqNullSafe(
-                        _pidx(F.expr(sets[pcol]))
+                        _pidx(_expr(spark, sets[pcol]))
                     )
                     out_same = snapm.filter(~moved).select(
                         F.col(hname).alias(HANDLE),
                         *[
-                            F.expr(sets[c]).alias(c) if c in sets else F.col(c)
+                            _expr(spark, sets[c]).alias(c) if c in sets else F.col(c)
                             for c in stored
                         ],
                     )
                     out_moved = snapm.filter(moved).select(
                         F.col(hname).alias(HANDLE),
                         *[
-                            F.expr(sets[c]).alias(c) if c in sets else F.col(c)
+                            _expr(spark, sets[c]).alias(c) if c in sets else F.col(c)
                             for c in stored
                         ],
                     )
@@ -6851,7 +6861,7 @@ def run_sql(
         # footers — a handle-only file would shadow later batches' columns
         matched = (
             snap.filter(
-                F.expr(_fix_collated_predicates(m.group("where"), store))
+                _expr(spark, _fix_collated_predicates(m.group("where"), store))
             )
             if m.group("where") else snap
         ).drop(*[c for c in gen if c in snap.columns])

@@ -55,6 +55,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.functions.sql_registry import ensure_functions
 from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION, snapshot_read
 from tiflash_spark.sources.delta_store import DeltaStore
 from tiflash_spark.sources.testscript import (
@@ -936,11 +937,6 @@ class DbgEnv:
         self.last_rs = "0.00"
         self.failpoints: set[str] = set()
         self.pending_snap: dict[int, dict] = {}
-        from tiflash_spark.functions.sql_registry import register_mysql_functions
-
-        if not getattr(spark, "_tiflash_mysql_fns", False):
-            register_mysql_functions(spark)
-            spark._tiflash_mysql_fns = True
         _register_dbg_udfs(spark)
 
     def next_tso(self) -> int:
@@ -2126,6 +2122,7 @@ def run_query(env: DbgEnv, sql: str, surface: str,
         avail.update(c.lower() for c in env.spark.table(view).columns)
     _check_idents(sql3, ctx, avail)
     try:
+        ensure_functions(env.spark, sql3)
         df = env.spark.sql(sql3)
         rows = df.collect()
     except DbgError:

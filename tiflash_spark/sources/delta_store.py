@@ -48,6 +48,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tiflash_spark.functions.sql_registry import ensure_functions
 from tiflash_spark.operators.mvcc import DELMARK, HANDLE, VERSION, snapshot_read
 
 
@@ -55,6 +56,51 @@ _INTERNAL_COLS = (VERSION, DELMARK, "_seg")
 
 # sentinel for update_table_def key removal (pk=None is a real value)
 UNSET = object()
+
+
+def _data_files(root: str):
+    """Paths of the data files Spark reads under ``root``: its hidden-path
+    rule skips names starting with '.' or '_' except '_k=v' partition
+    dirs, so sidecars (_ZONEMAP, _INVIDX_*/...) are never counted."""
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [
+            d for d in dirnames
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        ]
+        for f in filenames:
+            if not f.startswith(("_", ".")):
+                yield os.path.join(dirpath, f)
+
+
+def _footer_rows(root: str) -> int:
+    """Rows in the parquet files under ``root`` (all written by the store
+    itself), summed from their footers — no Spark job. Tombstones count."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(root))
+
+
+def _footer_schema(root: str, every: bool):
+    """The Spark schema its writer records in each parquet footer under
+    ``root``, read on the driver — Spark's own inference runs a job for
+    the same footer. The first file's schema (Spark also samples one),
+    or with ``every`` only one that all files share; None otherwise."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    seen = None
+    for f in _data_files(root):
+        raw = (pq.read_schema(f).metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        if raw is None or (seen is not None and raw != seen):
+            return None
+        seen = raw
+        if not every:
+            break
+    return StructType.fromJson(json.loads(seen)) if seen else None
 
 
 def _render_dec65_cols(df: DataFrame, td: dict | None) -> DataFrame:
@@ -895,6 +941,7 @@ class DeltaStore:
         for n in names:
             t = types.get(n, "string")
             if n in gen:
+                ensure_functions(self.spark, gen[n])
                 cols.append(F.expr(gen[n]).cast(t).alias(n))
                 continue
             # a renamed column's value may live under any prior stored
@@ -1209,17 +1256,32 @@ class DeltaStore:
         return None
 
     def _layer(self, name: str) -> DataFrame | None:
+        """One layer's raw rows; None only when it holds no data file.
+        A read error on a non-empty layer raises — reading it as empty
+        would silently drop its rows."""
         p = self.stable_path() if name == "stable" else self.delta_path()
+        if next(_data_files(p), None) is None:
+            if name == "stable":
+                schema = self._stable_schema()
+                if schema is not None:
+                    # all rows GC'd at the last compaction: a valid,
+                    # EMPTY table — not an error
+                    return self.spark.createDataFrame([], schema)
+            return None
+        r = self.spark.read
+        versioned = bool(self._schema_versions())
+        schema = None if versioned else _footer_schema(p, every=name == "delta")
+        if schema is not None:
+            r = r.schema(schema)
+        elif versioned or name == "delta":
+            # files span schema versions, or delta batches differ (a
+            # handle-only delete next to full upserts) → merge footers so
+            # no column depends on which file is sampled
+            r = r.option("mergeSchema", "true")
         try:
-            r = self.spark.read
-            if self._schema_versions():
-                # files span schema versions → merge footers so added
-                # columns are visible regardless of which file is sampled
-                r = r.option("mergeSchema", "true")
             df = r.parquet(p)
-            return df if df.columns else None
         except Exception as ex:
-            if "CANNOT_MERGE_SCHEMAS" in str(ex) and self._schema_versions():
+            if "CANNOT_MERGE_SCHEMAS" in str(ex) and versioned:
                 # files span a MODIFY COLUMN widening (int-chain /
                 # float->double / decimal growth): footers conflict, but
                 # an explicit schema at the CURRENT (widest) types reads
@@ -1227,13 +1289,8 @@ class DeltaStore:
                 widened = self._widened_layer(p)
                 if widened is not None:
                     return widened
-            if name == "stable":
-                schema = self._stable_schema()
-                if schema is not None:
-                    # all rows GC'd at the last compaction: a valid,
-                    # EMPTY table — not an error
-                    return self.spark.createDataFrame([], schema)
-            return None  # empty layer
+            raise
+        return df if df.columns else None
 
     def _widened_layer(self, p: str) -> DataFrame | None:
         """Read a layer whose footers disagree only by lossless widening:
@@ -1454,7 +1511,7 @@ class DeltaStore:
                 .write.mode("overwrite")
                 .parquet(stage)
             )
-        n = self.spark.read.schema(merged.schema).parquet(stage).count()
+        n = _footer_rows(stage)
         # layout metadata is staged INTO the new version dir: promoting
         # the dir promotes the metadata with it, atomically. A hash/flat
         # compact simply carries no _MANIFEST — the stale range manifest
@@ -1501,17 +1558,14 @@ class DeltaStore:
         log = self.log()
         n_seg = self._num_segments()
         if "_seg" in log.columns and n_seg:
-            # one tiny job computes the wanted segment ids with the SAME
-            # hash expression (and persisted modulus) used at write time
-            htype = "string" if isinstance(handles[0], str) else "long"
-            wanted = {
-                r.s
-                for r in self.spark.createDataFrame(
-                    [(h,) for h in handles], f"{HANDLE} {htype}"
-                )
-                .select(F.pmod(F.xxhash64(F.col(HANDLE)), F.lit(n_seg)).alias("s"))
-                .collect()
-            }
+            # the SAME hash expression (and persisted modulus) used at
+            # write time, over literals: the optimizer folds each to a
+            # segment id, so partitions are pruned at plan time, no job
+            htype = dict(log.dtypes)[HANDLE]
+            wanted = [
+                F.pmod(F.xxhash64(F.lit(h).cast(htype)), F.lit(n_seg))
+                for h in handles
+            ]
             log = log.filter(F.col("_seg").isin(*wanted) | F.col("_seg").isNull())
         out = self._apply_range_dels(
             snapshot_read(log.filter(F.col(HANDLE).isin(*handles)), read_ts=ts), ts
@@ -1605,7 +1659,7 @@ class DeltaStore:
             .mode("overwrite")
             .parquet(stage)
         )
-        n = self.spark.read.schema(merged.schema).parquet(stage).count()
+        n = _footer_rows(stage)
         self._write_stable_schema(merged.drop("_seg").schema, layer_dir=stage)
         if string_handle:
             # bounds from the written files: [min handle, next seg's min),
@@ -1973,6 +2027,7 @@ class DeltaStore:
             skip |= self._stage_vecidx(stage, touched)
             skip |= self._stage_ftsidx(stage, touched)
         self._link_tree(self.stable_path(), stage, skip=skip)
+        n = _footer_rows(tmp)
         self._merge_staged_files(tmp, stage)
         if man:
             if dlo is not None:
@@ -1993,7 +2048,7 @@ class DeltaStore:
             self._invidx_refresh_segs(touched)
             self._vecidx_refresh_segs(touched)
             self._ftsidx_refresh_segs(touched)
-        return out.count()
+        return n
 
     @staticmethod
     def _merge_staged_files(src: str, dst: str) -> None:
@@ -2209,21 +2264,17 @@ class DeltaStore:
         return left_id
 
     def delta_rows(self) -> int:
-        """Size of the un-compacted delta tail (rows)."""
-        delta = self._layer("delta")
-        return delta.count() if delta is not None else 0
+        """Size of the un-compacted delta tail (rows, tombstones included),
+        from the parquet footers."""
+        return _footer_rows(self.delta_path())
 
     def _delta_has_files(self) -> bool:
         """Cheap driver-side emptiness probe: does the delta dir hold any
         data file? Listing beats a delta.count() Spark job when the only
         question is 'is there a tail at all' (read_where's rescue-join
-        decision). Conservative: any parquet file ⇒ True, even if every
+        decision). Conservative: any data file ⇒ True, even if every
         row in it is a tombstone — a false True only adds a no-op join."""
-        droot = self.delta_path()
-        for dirpath, _dirnames, filenames in os.walk(droot):
-            if any(f.endswith(".parquet") for f in filenames):
-                return True
-        return False
+        return next(_data_files(self.delta_path()), None) is not None
 
     # --- rough-set filter: per-segment zone map (min-max index) -------------
     #
